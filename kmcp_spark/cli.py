@@ -126,12 +126,7 @@ def cmd_search(args) -> dict:
 
 
 def cmd_profile(args) -> dict:
-    from kmcp_spark.operators.cluster import (
-        cluster_report,
-        connected_components,
-        prune_weak_edges,
-        reassign_by_support,
-    )
+    from kmcp_spark.operators.cluster import cluster_report, resolve_clusters
     from kmcp_spark.operators.report import write_reports
     from kmcp_spark.sources.tables import checkpoint_rows
 
@@ -169,12 +164,13 @@ def cmd_profile(args) -> dict:
         from kmcp_spark.operators.discordance import filter_edges
 
         matches = filter_edges(matches, drop=drop)
-    edges = prune_weak_edges(matches, alpha=cfg.cc_prune_alpha)
-    labels = connected_components(
-        edges, all_nodes=sk.select("clip_id"), max_iters=cfg.cc_max_iters
-    )
-    if cfg.em_reassign_iters > 0:
-        labels = reassign_by_support(labels, matches, iters=cfg.em_reassign_iters)
+    labels = resolve_clusters(
+        matches,
+        alpha=cfg.cc_prune_alpha,
+        em_iters=cfg.em_reassign_iters,
+        max_iters=cfg.cc_max_iters,
+        all_nodes=sk.select("clip_id"),
+    ).labels
     clusters = cluster_report(labels)
     _write(clusters, args.out_dir + "/clusters")
     paths = write_reports(args.out_dir, clusters, matches)

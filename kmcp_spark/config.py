@@ -157,7 +157,6 @@ class PipelineConfig:
     verify: VerifyConfig = field(default_factory=VerifyConfig)
     checkpoint_dir: str = "_checkpoints"
     cc_max_iters: int = 50
-    cc_checkpoint_every: int = 5
     # weak-edge pruning before clustering (MegaPath-rule analog,
     # `kmcp/cmd/profile.go:1357-1388`): edges scoring below alpha x the
     # best incident score of both endpoints are dropped; 0 disables
@@ -186,6 +185,55 @@ class PipelineConfig:
         return hashlib.sha256(blob).hexdigest()[:16]
 
 
+# driver heap budget: at most 16 GB, and ~40% of the host's memory so
+# the Python workers and the page cache keep the rest
+HEAP_CAP_MB = 16 * 1024
+HEAP_FRAC = 0.4
+
+
+def _size_mb(size: str) -> float:
+    """JVM size string ("6g", "2008m", "512k", bytes) -> megabytes."""
+    size = size.strip().lower()
+    scale = {"k": 1 / 1024, "m": 1, "g": 1024, "t": 1024 * 1024}
+    if size and size[-1] in scale:
+        return float(size[:-1]) * scale[size[-1]]
+    return float(size) / (1024 * 1024)
+
+
+def mem_total_mb(meminfo: str = "/proc/meminfo") -> int | None:
+    """The host's MemTotal in MB, or None where /proc/meminfo is absent."""
+    try:
+        with open(meminfo) as f:
+            for line in f:
+                if line.startswith("MemTotal:"):
+                    return int(line.split()[1]) // 1024
+    except OSError:
+        pass
+    return None
+
+
+def driver_heap(override: str | None, total_mb: int | None) -> tuple[str, bool]:
+    """(heap size, pin -Xms to it).  The default heap is
+    min(16g, 40% of ``total_mb``); an ``override`` (SPARK_DRIVER_MEM) is
+    used as given.  -Xms is pinned only when the heap fits the 40%
+    budget: a pinned heap the host cannot commit kills the JVM at
+    start-up.  Unknown host memory keeps the plain 16g, pinned."""
+    if total_mb is None:
+        return override or "16g", True
+    budget = HEAP_FRAC * total_mb
+    heap = override or f"{int(min(HEAP_CAP_MB, budget))}m"
+    return heap, _size_mb(heap) <= budget
+
+
+def default_cores() -> int:
+    """CPUs this process may run on (its affinity mask, not the host's
+    core count: a container or taskset sees only its share)."""
+    try:
+        return len(os.sched_getaffinity(0))
+    except AttributeError:  # no sched_getaffinity off Linux
+        return os.cpu_count() or 1
+
+
 def get_spark(
     app: str = "kmcp_spark",
     cores: int | None = None,
@@ -197,7 +245,7 @@ def get_spark(
     On a real cluster these settings come from spark-submit; nothing in
     the pipeline assumes local mode.
     """
-    cores = cores or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cores = cores or int(os.environ.get("SPARK_GRAFT_CPUS") or default_cores())
     shuffle_partitions = shuffle_partitions or max(cores, 8)
     # this VM zeroes fresh pages at only ~300 MB/s, so first-touch page
     # faults dominate at high parallelism: (a) make glibc in the python
@@ -207,7 +255,7 @@ def get_spark(
     # uncommits and refaults pages (observed: repeat scans 12.3 s → 2.4 s)
     os.environ.setdefault("MALLOC_MMAP_THRESHOLD_", str(512 * 1024 * 1024))
     os.environ.setdefault("MALLOC_TRIM_THRESHOLD_", str(512 * 1024 * 1024))
-    mem = os.environ.get("SPARK_DRIVER_MEM", "16g")
+    mem, pin = driver_heap(os.environ.get("SPARK_DRIVER_MEM"), mem_total_mb())
     b = (
         SparkSession.builder.master(f"local[{cores}]")
         .appName(app)
@@ -222,7 +270,6 @@ def get_spark(
         # core counts; 256 keeps per-task batches ~25-130 MB
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "256")
         .config("spark.driver.memory", mem)
-        .config("spark.driver.extraJavaOptions", f"-Xms{mem}")
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # audio rows are large; smaller splits balance the map waves
@@ -235,6 +282,8 @@ def get_spark(
         # bus-bound scan stages; see BENCH/BASELINE.md "data plane"
         .config("spark.sql.parquet.compression.codec", "uncompressed")
     )
+    if pin:
+        b = b.config("spark.driver.extraJavaOptions", f"-Xms{mem}")
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)
     spark = b.getOrCreate()

@@ -19,6 +19,17 @@ implemented as a DataFrame join loop with
     (the star-contraction idea of Kiveris et al., "Connected Components
     in MapReduce and Beyond", SoCC 2014).
 
+Entry point: ``resolve_clusters`` composes the whole chain — weak-edge
+pruning, connected components, support reassignment — behind one size
+gate.  It fetches at most ``driver_max_edges + 1`` verified edges
+(``limit`` + ``toArrow``: one job, which is both the size probe and the
+data).  If the bound holds, all three steps run in Python on the driver
+under the same rules as the Spark operators below, and the labels
+return as a small DataFrame; the clusters stage is then one fetch
+plus its checkpoint write.  Above the bound it runs the Spark operators
+``prune_weak_edges`` -> ``connected_components`` -> ``reassign_by_support``,
+where the join loop described above takes over.
+
 Output: clusters(clip_id string, cluster_id string, cluster_size bigint,
                   is_canonical boolean)
 where cluster_id is the lexicographically-smallest member id and the
@@ -27,7 +38,38 @@ canonical member is that clip (deterministic representative pick).
 
 from __future__ import annotations
 
+import math
+from collections.abc import Iterable
+from typing import NamedTuple
+
 from pyspark.sql import DataFrame, Window, functions as F
+
+
+def _union_find(pairs: Iterable[tuple[str, str]]) -> dict[str, str]:
+    """Driver-side components of an edge list: node -> cluster_id, the
+    lexicographically smallest member of the node's component."""
+    parent: dict[str, str] = {}
+
+    def find(x: str) -> str:
+        r = x
+        while parent[r] != r:
+            r = parent[r]
+        while parent[x] != r:  # path compression
+            parent[x], x = r, parent[x]
+        return r
+
+    for a, b in pairs:
+        parent.setdefault(a, a)
+        parent.setdefault(b, b)
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[ra] = rb
+    comp: dict[str, str] = {}
+    for node in parent:
+        r = find(node)
+        if r not in comp or node < comp[r]:
+            comp[r] = node
+    return {n: comp[find(n)] for n in parent}
 
 
 def connected_components(
@@ -50,7 +92,7 @@ def connected_components(
     (verified dup pairs), not input rows: 100k edges is ~10 MB on the
     driver regardless of corpus size, and anything larger takes the
     distributed hash-min + pointer-jumping loop below.  Both paths are
-    equivalence-tested (`test_cluster.py::test_cc_driver_and_loop_agree`).
+    equivalence-tested (`test_gates_and_escalation.py::test_cc_driver_and_loop_agree`).
     """
     from kmcp_spark.runtime import persistent_ids, unpersist_ids
 
@@ -66,32 +108,11 @@ def connected_components(
     n_edges = edges.count()  # cheap: counts the checkpointed blocks
 
     if n_edges <= driver_max_edges:
-        parent: dict[str, str] = {}
-
-        def find(x: str) -> str:
-            r = x
-            while parent[r] != r:
-                r = parent[r]
-            while parent[x] != r:  # path compression
-                parent[x], x = r, parent[x]
-            return r
-
         rows = edges.collect()
         unpersist_ids(sc, edge_ids)  # labels below are built from driver data
-        for row in rows:
-            a, b = row.src, row.dst
-            parent.setdefault(a, a)
-            parent.setdefault(b, b)
-            ra, rb = find(a), find(b)
-            if ra != rb:
-                parent[ra] = rb
-        comp: dict[str, str] = {}
-        for node in parent:  # cluster_id = lexicographically-min member
-            r = find(node)
-            if r not in comp or node < comp[r]:
-                comp[r] = node
+        comp = _union_find((row.src, row.dst) for row in rows)
         labels = pairs.sparkSession.createDataFrame(
-            [(n, comp[find(n)]) for n in parent],
+            list(comp.items()),
             "clip_id string, cluster_id string",
         )
         if all_nodes is not None:
@@ -275,6 +296,109 @@ def reassign_by_support(
         unpersist_ids(sc, prev_round_ids)
         prev_round_ids = persistent_ids(sc) - ids_before
     return labels
+
+
+class Resolution(NamedTuple):
+    """What ``resolve_clusters`` returns: the labels, and how it got them."""
+
+    labels: DataFrame  # (clip_id, cluster_id)
+    cc_path: str  # "driver" | "distributed"
+    edges_in: int
+    edges_kept: int  # after weak-edge pruning
+
+
+def _best_cluster(support: dict[str, list]) -> str:
+    """argmax-support cluster under SQL rules: NULL weights are skipped by
+    the sum, an all-NULL support ranks last (DESC NULLS LAST), and equal
+    supports go to the smaller cluster_id."""
+
+    def rank(item):
+        cid, ws = item
+        vals = [w for w in ws if w is not None]
+        return (not vals, -math.fsum(vals) if vals else 0.0, cid)
+
+    return min(support.items(), key=rank)[0]
+
+
+def resolve_clusters(
+    edges: DataFrame,
+    score_col: str = "containment",
+    alpha: float = 0.5,
+    em_iters: int = 1,
+    max_iters: int = 50,
+    all_nodes: DataFrame | None = None,
+    driver_max_edges: int = 100_000,
+) -> Resolution:
+    """Verified edges(a, b, score) -> cluster labels: weak-edge pruning,
+    connected components, then ``em_iters`` rounds of support
+    reassignment over the unpruned edges — the whole stage-3/stage-4
+    profiler chain in one call.
+
+    Every endpoint of an input edge gets a label, also one whose edges
+    were all pruned.  ``all_nodes`` (column ``clip_id``), when given,
+    must contain every endpoint; it adds singleton rows for the nodes
+    without edges.
+
+    Size gate: one ``limit(driver_max_edges + 1)`` fetch of
+    (a, b, score) is both the size probe and the data.  At most
+    ``driver_max_edges`` rows run all three steps in Python on the
+    driver, with the same rules as the Spark operators; larger edge
+    sets run ``prune_weak_edges`` -> ``connected_components`` ->
+    ``reassign_by_support`` on the cluster.  Both paths are
+    equivalence-tested (`test_resolve_clusters.py`).
+    """
+    # toArrow, not collect: collect() runs a limit as incremental take()
+    # rounds (one job per round of partitions), the Arrow path executes
+    # it as a single job whose partitions each send at most the limit
+    probe = edges.select("a", "b", score_col).limit(driver_max_edges + 1).toArrow()
+    if probe.num_rows > driver_max_edges:
+        kept = prune_weak_edges(edges, alpha=alpha, score_col=score_col)
+        if all_nodes is None:
+            all_nodes = (
+                edges.select(F.col("a").alias("clip_id"))
+                .union(edges.select(F.col("b").alias("clip_id")))
+                .distinct()
+            )
+        labels = connected_components(
+            kept, all_nodes=all_nodes, max_iters=max_iters, driver_max_edges=driver_max_edges
+        )
+        if em_iters > 0:
+            labels = reassign_by_support(labels, edges, score_col=score_col, iters=em_iters)
+        return Resolution(labels, "distributed", edges.count(), kept.count())
+
+    trip = list(zip(*(col.to_pylist() for col in probe.columns)))
+    if alpha > 0:  # prune_weak_edges: keep iff s >= alpha * min(best_a, best_b)
+        best: dict[str, float] = {}
+        for a, b, s in trip:
+            if s is not None:
+                for n in (a, b):
+                    if s > best.get(n, -math.inf):
+                        best[n] = s
+        kept = [
+            (a, b)
+            for a, b, s in trip
+            if s is not None and s >= alpha * min(best[a], best[b])
+        ]
+    else:
+        kept = [(a, b) for a, b, _ in trip]
+    comp = _union_find(kept)
+    labels = {n: comp.get(n, n) for a, b, _ in trip for n in (a, b)}
+    for _ in range(em_iters):  # reassign_by_support, synchronous rounds
+        support: dict[str, dict[str, list]] = {}
+        for a, b, s in trip:
+            support.setdefault(a, {}).setdefault(labels[b], []).append(s)
+            support.setdefault(b, {}).setdefault(labels[a], []).append(s)
+        labels = {n: _best_cluster(by_cluster) for n, by_cluster in support.items()}
+    out = edges.sparkSession.createDataFrame(
+        list(labels.items()), "clip_id string, cluster_id string"
+    )
+    if all_nodes is not None:
+        out = (
+            all_nodes.select("clip_id")
+            .join(F.broadcast(out), "clip_id", "left")
+            .select("clip_id", F.coalesce("cluster_id", F.col("clip_id")).alias("cluster_id"))
+        )
+    return Resolution(out, "driver", len(trip), len(kept))
 
 
 def cluster_report(labels: DataFrame) -> DataFrame:

@@ -15,17 +15,13 @@ from __future__ import annotations
 import json
 import os
 import time
+from contextlib import contextmanager
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from kmcp_spark.config import PipelineConfig
-from kmcp_spark.operators.cluster import (
-    cluster_report,
-    connected_components,
-    prune_weak_edges,
-    reassign_by_support,
-)
+from kmcp_spark.operators.cluster import cluster_report, resolve_clusters
 from kmcp_spark.operators.lsh import band_buckets, bucket_stats, candidate_pairs
 from kmcp_spark.operators.sketch import sketch_clips
 from kmcp_spark.operators.verify import score_pairs, verify_pairs
@@ -50,6 +46,9 @@ class StageMetric:
     # build() is lazy, the write job executes the plan.
     write_ms: int = 0
     post_ms: int = 0
+    # stage-specific counters, merged into the stage's metrics.jsonl row
+    # (clusters: cc_path, edges_in, edges_kept)
+    extra: dict = field(default_factory=dict)
 
 
 @dataclass
@@ -66,6 +65,20 @@ class PipelineResult:
     clusters: DataFrame
     verified: DataFrame
     metrics: list[StageMetric] = field(default_factory=list)
+
+
+@contextmanager
+def _job_group(sc, group: str):
+    """Tag the jobs submitted inside the block with a job group (the
+    property ``setJobGroup`` sets), so ``statusTracker()
+    .getJobIdsForGroup`` can count a stage's jobs.  The caller's job
+    description and any enclosing group are left as they were."""
+    prev = sc.getLocalProperty("spark.jobGroup.id")
+    sc.setLocalProperty("spark.jobGroup.id", group)
+    try:
+        yield
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", prev)
 
 
 class DedupPipeline:
@@ -99,6 +112,10 @@ class DedupPipeline:
             df = read_checkpoint(self.spark, path)
             self.metrics.append(StageMetric(name, -1, int((time.time() - t0) * 1000), True))
             return df
+        with _job_group(self.spark.sparkContext, f"kmcp_spark.{name}"):
+            return self._write_stage(name, path, t0, build, partition_by)
+
+    def _write_stage(self, name, path, t0, build, partition_by) -> DataFrame:
         df = build()
         t_w = time.time()
         write_checkpoint_data(df, path, partition_by)
@@ -282,6 +299,8 @@ class DedupPipeline:
 
             verified = self._stage("verified", build_verified, force=force)
 
+        cc_stats: dict = {}
+
         def build_clusters():
             # stage-3/stage-4 split of the reference profiler: weak-edge
             # pruning (MegaPath rule, `kmcp/cmd/profile.go:1357-1388`)
@@ -289,24 +308,32 @@ class DedupPipeline:
             # over-merge two dense clusters; EM-style reassignment over
             # the UNPRUNED edges (`profile.go:2075-2117`) then decides
             # final MEMBERSHIP by dominant accumulated support
-            edges = prune_weak_edges(verified, alpha=cfg.cc_prune_alpha)
-            labels_rep = connected_components(
-                edges,
-                all_nodes=sketches.select("clip_id"),
+            res = resolve_clusters(
+                verified,
+                alpha=cfg.cc_prune_alpha,
+                em_iters=cfg.em_reassign_iters,
                 max_iters=cfg.cc_max_iters,
-                checkpoint_every=cfg.cc_checkpoint_every,
             )
-            if cfg.em_reassign_iters > 0:
-                labels_rep = reassign_by_support(
-                    labels_rep, verified, iters=cfg.em_reassign_iters
+            cc_stats.update(
+                cc_path=res.cc_path, edges_in=res.edges_in, edges_kept=res.edges_kept
+            )
+            # expand representative labels back over their exact groups.
+            # Every sketched clip is a representative, so a rep without
+            # a label is a singleton: this join replaces an all_nodes
+            # fill-in.  Driver-path labels are bounded (at most two per
+            # edge), so they broadcast: a map-side join, no shuffle of
+            # exact; distributed-path labels are left to the planner.
+            labels = res.labels.withColumnRenamed("clip_id", "rep_id")
+            if res.cc_path == "driver":
+                labels = F.broadcast(labels)
+            return cluster_report(
+                exact.join(labels, "rep_id", "left").select(
+                    "clip_id", F.coalesce("cluster_id", F.col("rep_id")).alias("cluster_id")
                 )
-            # expand representative labels back over their exact groups
-            full = exact.join(
-                labels_rep.withColumnRenamed("clip_id", "rep_id"), "rep_id"
-            ).select("clip_id", "cluster_id")
-            return cluster_report(full)
+            )
 
         clusters = self._stage("clusters", build_clusters, force=force)
+        self.metrics[-1].extra.update(cc_stats)
 
         if diagnostics:
             # bucket-size histogram = `utils index-density` analog
@@ -339,6 +366,7 @@ class DedupPipeline:
                 "resumed": m.resumed,
                 "fingerprint": self.fp,
                 "ts": time.time(),
+                **m.extra,
             }
             for m in self.metrics
         ]

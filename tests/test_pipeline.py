@@ -104,6 +104,40 @@ def test_partition_lineage_records_every_stage_file(result):
         for e in r["files"]:
             assert e["rows"] >= 0 and e["bytes"] > 0
             assert os.path.exists(os.path.join(out, m.stage, e["file"]))
+    # metrics.jsonl schema: the same keys on every row, plus the
+    # clusters stage's resolution counters on a row that ran the stage
+    base = {"stage", "rows_out", "wall_ms", "write_ms", "post_ms", "resumed",
+            "fingerprint", "ts"}
+    with open(os.path.join(out, "metrics.jsonl")) as f:
+        rows = [json.loads(line) for line in f]
+    ran = {r["stage"]: r for r in rows if not r["resumed"]}
+    for r in rows:
+        extra = {"cc_path", "edges_in", "edges_kept"} if r is ran["clusters"] else set()
+        assert set(r) == base | extra, r
+    cl = ran["clusters"]
+    assert cl["cc_path"] == "driver"
+    assert cl["edges_in"] == ran["verified"]["rows_out"] >= cl["edges_kept"] > 0
+
+
+def test_clusters_stage_job_budget(spark, corpus, tmp_path_factory):
+    """A small graph resolves on the driver: the clusters stage is one
+    collect of the verified edges plus the checkpoint write, at most 5
+    Spark jobs (the prune -> CC -> reassign composition took 19)."""
+    out = str(tmp_path_factory.mktemp("pipe_jobs"))
+    clips, _ = corpus
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    group = "kmcp_spark.clusters"
+
+    def job_ids() -> set[int]:
+        # the tracker is fed by the asynchronous listener bus
+        sc._jsc.sc().listenerBus().waitUntilEmpty(60_000)
+        return set(tracker.getJobIdsForGroup(group))
+
+    before = job_ids()
+    DedupPipeline(spark, PipelineConfig(), out).run(clips)
+    jobs = job_ids() - before
+    assert 0 < len(jobs) <= 5, sorted(jobs)
 
 
 def test_decode_invariant_snr(spark):
