@@ -293,11 +293,12 @@ def _lsh_bucket_skew(spark: SparkSession, sf: str) -> DataFrame:
     table (the xxhash64 banding is not SQL-expressible; everything after
     it is) and BOTH cap behaviors run from that same relation:
 
-      path='drop'      document-path ``pairs_from_band_rows`` — oversized
-                       buckets are dropped outright;
-      path='escalate'  pipeline-path ``candidate_pairs`` — oversized
-                       buckets emit O(size) min/max anchor edges instead
-                       (kmcp's escalation, kmcp/cmd/index.go:787-894).
+      path='drop'      ``bucket_pairs(oversized="drop")``, the document
+                       path — oversized buckets are dropped outright;
+      path='escalate'  ``bucket_pairs(oversized="escalate")``, the
+                       pipeline path — oversized buckets emit O(size)
+                       min/max anchor edges instead (kmcp's escalation,
+                       kmcp/cmd/index.go:787-894).
 
     ``n_oversized_buckets`` (nonzero — 64 bands x 1 giant bucket) rides
     on every row, so the oracle hash-checks that the caps FIRED, not
@@ -305,7 +306,7 @@ def _lsh_bucket_skew(spark: SparkSession, sf: str) -> DataFrame:
     from pyspark.sql import functions as F
 
     from kmcp_spark.corpus import skew_doc_rows
-    from kmcp_spark.operators.lsh import candidate_pairs
+    from kmcp_spark.operators.lsh import BAND_KEY, band_rows, bucket_pairs
 
     planted = spark.createDataFrame(
         skew_doc_rows(unique_tails=False), schema="doc_id bigint, text string"
@@ -315,21 +316,22 @@ def _lsh_bucket_skew(spark: SparkSession, sf: str) -> DataFrame:
         F.col("n_grams") > 0
     )
     path = _write_aux(
-        D.doc_band_rows(sigs, bands=64, rows_per_band=2),
+        band_rows(sigs, 64, 2, "doc_id"),
         f"skew_bands_{_sflabel(sf)}",
         ["doc_id", "band_id"],
     )
     rel = spark.read.parquet(path)
-    drop = D.pairs_from_band_rows(rel, _SKEW_BUCKET_CAP).withColumn(
-        "path", F.lit("drop")
+    drop, _ = bucket_pairs(rel, "doc_id", BAND_KEY, _SKEW_BUCKET_CAP)
+    esc, oversized = bucket_pairs(
+        rel, "doc_id", BAND_KEY, _SKEW_BUCKET_CAP, oversized="escalate"
     )
-    esc, oversized = candidate_pairs(
-        rel.withColumnRenamed("doc_id", "clip_id"), _SKEW_BUCKET_CAP
-    )
-    esc = esc.withColumn("path", F.lit("escalate"))
     n_over = oversized.agg(F.count("*").alias("n_oversized_buckets"))
-    cols = ["path", "a", "b", "shared_bands"]
-    return drop.select(*cols).unionByName(esc.select(*cols)).crossJoin(n_over)
+    cols = ["path", "a", "b", F.col("shared").alias("shared_bands")]
+    return (
+        drop.withColumn("path", F.lit("drop")).select(*cols)
+        .unionByName(esc.withColumn("path", F.lit("escalate")).select(*cols))
+        .crossJoin(n_over)
+    )
 
 
 _FIXTURE_DIR = os.path.join(os.path.dirname(os.path.abspath(__file__)), "_fixtures")
@@ -525,7 +527,7 @@ def _clips_verified(spark: SparkSession):
     The localCheckpointed results are valid for the life of the session,
     so the second and later consumers pay only the lookup."""
     from kmcp_spark.config import PipelineConfig
-    from kmcp_spark.operators.lsh import band_buckets, candidate_pairs
+    from kmcp_spark.operators.lsh import BAND_KEY, band_buckets, bucket_pairs
     from kmcp_spark.operators.sketch import sketch_clips
     from kmcp_spark.operators.verify import score_pairs, verify_pairs
 
@@ -536,12 +538,16 @@ def _clips_verified(spark: SparkSession):
     cfg = _clips_cfg()
     clips, truth = _clips_corpus(spark)
     sk = sketch_clips(clips, cfg).localCheckpoint(eager=True)
-    pairs, _ = candidate_pairs(
+    pairs, _ = bucket_pairs(
         band_buckets(
             sk, cfg.lsh.bands, cfg.lsh.rows_per_band, cfg.lsh.domain_bands
         ),
+        "clip_id",
+        BAND_KEY,
         cfg.lsh.max_bucket,
+        oversized="escalate",
     )
+    pairs = pairs.withColumnRenamed("shared", "shared_bands")
     verified = verify_pairs(score_pairs(pairs, sk, cfg), clips, cfg).localCheckpoint(
         eager=True
     )

@@ -165,20 +165,6 @@ class PipelineConfig:
     # profiler's stage-4 multi-mapped read reassignment analog,
     # `kmcp/cmd/profile.go:2075-2117`); 0 disables
     em_reassign_iters: int = 1
-    # Fuse the small mid-stages (candidates -> verified) into one
-    # in-memory persisted chain instead of two parquet checkpoints.
-    # Measured (r6, BENCH/BASELINE.md): in FRESH-JVM single-shot runs
-    # fusion saves ~3-7 s (fewer distinct job shapes to JIT/codegen);
-    # in a warmed session it is a wash (the saved write jobs are repaid
-    # by the clusters stage reading the cached deep-lineage relation
-    # instead of a compact parquet leaf).  At production scale the win
-    # is write amplification: the candidate-pairs relation is the
-    # largest intermediate, and fusion never spills it to storage.
-    # Trade-off: resume granularity coarsens to sketches -> clusters
-    # (a crash mid-chain redoes candidates+verified), so the default
-    # stays False; the scaling bench opts in (fresh single-shot legs,
-    # per-stage resume buys nothing there).
-    fuse_small_stages: bool = False
 
     def fingerprint(self) -> str:
         blob = json.dumps(asdict(self), sort_keys=True).encode()

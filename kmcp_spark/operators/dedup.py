@@ -6,23 +6,26 @@ rows and (where possible) in pure JVM DataFrame ops so a SQL oracle can
 reproduce them exactly:
 
   - exact dedup: md5(text) hash-groupBy (one shuffle, partial agg).
-  - n-gram Jaccard pairs: explode distinct word n-grams → self-join on
-    gram → pair-count agg → Jaccard from per-doc gram counts.  This is
-    the exact-verification shape (kmcp's qCov/Jaccard scoring,
+  - n-gram Jaccard pairs: explode distinct word n-grams → one bucket
+    per gram → pair-count agg → Jaccard from per-doc gram counts.  This
+    is the exact-verification shape (kmcp's qCov/Jaccard scoring,
     `kmcp/cmd/util-db-search.go:90-92`) without the sketch.
-  - MinHash-LSH pairs: pandas-UDF signatures → band join (candidate
+  - MinHash-LSH pairs: pandas-UDF signatures → band buckets (candidate
     generation) → exact re-verification of candidates — the full
     sketch → index-probe → verify path of the clip pipeline, over text.
-  - SimHash pairs: 64-bit fingerprints, Hamming filter over LSH
+  - SimHash pairs: 64-bit fingerprints, Hamming filter over band
     candidates.
 
-Scale notes: every join here keys on either a gram hash or a band
-hash; both distribute.  The n-gram self-join caps hot grams (stopword
-shingles) exactly like lsh.candidate_pairs caps hot buckets.
+Every pair expansion here — gram buckets, MinHash band buckets, SimHash
+band buckets — is one call of the shared kernel
+``lsh.bucket_pairs(..., oversized="drop")``: one shuffle over the bucket
+key, hot buckets (stopword shingles, degenerate bands) capped and
+reported, never silently expanded quadratically.
 """
 
 from __future__ import annotations
 
+import sys
 from collections.abc import Iterator
 
 import numpy as np
@@ -37,6 +40,7 @@ from kmcp_spark.functions.shingle import (
     word_symbols,
 )
 from kmcp_spark.functions.simhash import simhash64
+from kmcp_spark.operators.lsh import BAND_KEY, band_rows, bucket_pairs
 from kmcp_spark.runtime import widen_narrow_scan
 
 
@@ -97,44 +101,28 @@ def ngram_jaccard_pairs(
     degenerate boilerplate crosses it, and such pairs surface through
     their other grams).
     """
-    g, sizes, g_ok = _gram_tables(docs, n, max_gram_docs)
-    pairs = (
-        g_ok.alias("l")
-        .join(g_ok.alias("r"), "gram")
-        .filter(F.col("l.doc_id") < F.col("r.doc_id"))
-        .groupBy(F.col("l.doc_id").alias("a"), F.col("r.doc_id").alias("b"))
-        .agg(F.count("*").alias("n_common"))
-    )
-    return (
-        pairs.join(sizes.withColumnRenamed("doc_id", "a").withColumnRenamed("n_grams", "na"), "a")
-        .join(sizes.withColumnRenamed("doc_id", "b").withColumnRenamed("n_grams", "nb"), "b")
-        .select(
-            "a",
-            "b",
-            "n_common",
-            (F.col("n_common") / (F.col("na") + F.col("nb") - F.col("n_common"))).alias(
-                "jaccard"
-            ),
-        )
-        .filter(F.col("jaccard") >= threshold)
-    )
+    pairs, _ = _gram_pairs(*_gram_tables(docs, n), max_gram_docs)
+    return pairs.select(
+        "a", "b", "n_common", _jaccard().alias("jaccard")
+    ).filter(F.col("jaccard") >= threshold)
 
 
-def _gram_tables(docs: DataFrame, n: int, max_gram_docs: int):
-    """Shared, persisted gram relation: Catalyst does not deduplicate
-    common subplans, so without this the (doc_id, gram) explosion is
+def _gram_tables(docs: DataFrame, n: int):
+    """Shared, persisted gram relation ``(doc_id, gram)`` and per-doc
+    sizes ``(doc_id, n_grams)``: Catalyst does not deduplicate common
+    subplans, so without the persist the (doc_id, gram) explosion is
     recomputed for every consumer — observed 6 full scans of the input
     in one query plan.  MEMORY_AND_DISK persist keeps it to one scan;
     Spark's LRU eviction reclaims it.
 
     Grams are reduced to ``xxhash64`` int64 keys before the shuffle: the
-    self-join and frequency groupBy only COUNT matches, so the gram text
-    itself is dead weight — an int64 key cuts the shuffled/cached bytes
-    ~2.5x vs the avg ~20-byte gram string at n=3.  Downstream output
-    (pairs + jaccard/containment) is unchanged, so the DuckDB oracle
-    (which joins on gram TEXT) still matches; a 64-bit collision would
-    need ~2^32 distinct grams in one corpus to appear at even 50% odds
-    for a single colliding pair."""
+    pair expansion only COUNTS matches, so the gram text itself is dead
+    weight — an int64 key cuts the shuffled/cached bytes ~2.5x vs the
+    avg ~20-byte gram string at n=3.  Downstream output (pairs +
+    jaccard/containment) is unchanged, so the DuckDB oracle (which joins
+    on gram TEXT) still matches; a 64-bit collision would need ~2^32
+    distinct grams in one corpus to appear at even 50% odds for a single
+    colliding pair."""
     from pyspark import StorageLevel
 
     from kmcp_spark.runtime import defer_unpersist, release_deferred
@@ -143,22 +131,36 @@ def _gram_tables(docs: DataFrame, n: int, max_gram_docs: int):
     # protocol, runtime.py): without this a long-lived session running
     # many document queries accumulates every query's gram relations.
     # Scoped to tag="doc" so the lsh-tagged oversized-bucket cache
-    # registered by candidate_pairs (operators/lsh.py) survives an
-    # interleaved document-dedup call.
+    # registered by an escalating bucket_pairs call (operators/lsh.py)
+    # survives an interleaved document-dedup call.
     release_deferred(tag="doc")
     g = defer_unpersist(
         word_ngrams_df(docs, n)
         .select("doc_id", F.xxhash64("gram").alias("gram"))
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    sizes = g.groupBy("doc_id").agg(F.count("*").alias("n_grams"))
-    gram_freq = g.groupBy("gram").agg(F.count("*").alias("df"))
-    g_ok = defer_unpersist(
-        g.join(
-            gram_freq.filter(F.col("df") <= max_gram_docs).select("gram"), "gram"
-        ).persist(StorageLevel.MEMORY_AND_DISK)
+    return g, g.groupBy("doc_id").agg(F.count("*").alias("n_grams"))
+
+
+def _jaccard():
+    """Jaccard of two gram sets from (n_common, na, nb)."""
+    return F.col("n_common") / (F.col("na") + F.col("nb") - F.col("n_common"))
+
+
+def _gram_pairs(
+    g: DataFrame, sizes: DataFrame, max_gram_docs: int
+) -> tuple[DataFrame, DataFrame]:
+    """Gram-sharing doc pairs ``(a, b, n_common, na, nb)`` plus the hot
+    grams the cap dropped.  One bucket per gram: grams are distinct per
+    doc, so a bucket's size is the gram's document frequency and grams in
+    more than ``max_gram_docs`` docs are excluded from pair expansion."""
+    pairs, hot = bucket_pairs(g, "doc_id", ["gram"], max_gram_docs)
+    sized = (
+        pairs.withColumnRenamed("shared", "n_common")
+        .join(sizes.withColumnRenamed("doc_id", "a").withColumnRenamed("n_grams", "na"), "a")
+        .join(sizes.withColumnRenamed("doc_id", "b").withColumnRenamed("n_grams", "nb"), "b")
     )
-    return g, sizes, g_ok
+    return sized, hot
 
 
 def ngram_cap_audit(
@@ -176,54 +178,23 @@ def ngram_cap_audit(
     run where the cap never fired cannot hash-match one where it did.
 
     Unlike calling ``ngram_jaccard_pairs`` twice, both legs branch off
-    the same persisted gram/size/df tables (one text scan, one df
-    aggregation) — the skew-oracle query dropped 45 s -> seconds at
-    sf0.1 when the two independent gram builds were fused (r6).
+    the same persisted gram/size tables (one text scan), and the raw
+    leg is the same kernel call with no cap — the skew-oracle query
+    dropped 45 s -> seconds at sf0.1 when the two independent gram
+    builds were fused (r6).  ``n_hot_grams`` counts the capped leg's
+    oversized buckets.
     Reference analog: kmcp's oversized-block escalation is likewise an
     audited cap, not a silent drop (`kmcp/cmd/index.go:787-894`).
     """
-    from pyspark import StorageLevel
+    g, sizes = _gram_tables(docs, n)
 
-    from kmcp_spark.runtime import defer_unpersist, release_deferred
+    def scored(max_bucket: int) -> tuple[DataFrame, DataFrame]:
+        pairs, hot = _gram_pairs(g, sizes, max_bucket)
+        return pairs.withColumn("jaccard", _jaccard()).filter(F.col("jaccard") >= threshold), hot
 
-    release_deferred(tag="doc")
-    g = defer_unpersist(
-        word_ngrams_df(docs, n)
-        .select("doc_id", F.xxhash64("gram").alias("gram"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    sizes = g.groupBy("doc_id").agg(F.count("*").alias("n_grams"))
-    freq = defer_unpersist(
-        g.groupBy("gram").agg(F.count("*").alias("df")).persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    n_hot = freq.filter(F.col("df") > max_gram_docs).agg(
-        F.count("*").alias("n_hot_grams")
-    )
-
-    def pair_counts(grams: DataFrame) -> DataFrame:
-        return (
-            grams.alias("l")
-            .join(grams.alias("r"), "gram")
-            .filter(F.col("l.doc_id") < F.col("r.doc_id"))
-            .groupBy(F.col("l.doc_id").alias("a"), F.col("r.doc_id").alias("b"))
-            .agg(F.count("*").alias("n_common"))
-        )
-
-    def scored(pairs: DataFrame) -> DataFrame:
-        return (
-            pairs.join(
-                sizes.withColumnRenamed("doc_id", "a").withColumnRenamed("n_grams", "na"), "a"
-            )
-            .join(sizes.withColumnRenamed("doc_id", "b").withColumnRenamed("n_grams", "nb"), "b")
-            .withColumn(
-                "jaccard", F.col("n_common") / (F.col("na") + F.col("nb") - F.col("n_common"))
-            )
-            .filter(F.col("jaccard") >= threshold)
-        )
-
-    raw = scored(pair_counts(g))
-    g_ok = g.join(freq.filter(F.col("df") <= max_gram_docs).select("gram"), "gram")
-    capped = scored(pair_counts(g_ok))
+    raw, _ = scored(sys.maxsize)
+    capped, hot = scored(max_gram_docs)
+    n_hot = hot.agg(F.count("*").alias("n_hot_grams"))
     return (
         raw.select(
             "a",
@@ -283,79 +254,6 @@ def doc_signatures(
     return src.mapInPandas(run, schema=schema)
 
 
-def lsh_candidates(
-    signatures: DataFrame, bands: int, rows_per_band: int, max_bucket: int = 10_000
-) -> DataFrame:
-    """Band-join candidate pairs (a, b, shared_bands) from signatures.
-
-    TWO shuffles total: one hash-agg that collects each bucket's member
-    ids (map-side partial, bucket cap applied on the collected array —
-    an earlier version used freq-count + join + self-join, 4 shuffles
-    for the same result), then the pair-count agg.  Pair expansion is a
-    JVM ``transform``/``slice`` comprehension over the member array —
-    O(sz^2) per bucket, bounded by ``max_bucket`` exactly like the
-    count-based cap was.  Buckets above the cap are dropped here (the
-    clip pipeline's ``lsh.candidate_pairs`` escalates instead; for the
-    document queries the other 63 bands make the miss probability
-    negligible, see ``minhash_lsh_dup_pairs``).
-
-    Scale bound, stated honestly: the member array of a bucket is
-    materialized by the agg BEFORE the cap filter (Spark's sort-based
-    agg fallback spills it, so no OOM, but a degenerate 10^8-member
-    bucket would still build one 10^8-element array row).  Byte-identical
-    duplicate classes — the only realistic source of such buckets — are
-    removed by the exact-dedup short-circuit upstream; the pipeline
-    variant keeps the join-based escalation precisely because it never
-    materializes bucket membership."""
-    return pairs_from_band_rows(
-        doc_band_rows(signatures, bands, rows_per_band), max_bucket
-    )
-
-
-def doc_band_rows(
-    signatures: DataFrame, bands: int, rows_per_band: int
-) -> DataFrame:
-    """(doc_id, band_id, band_hash) band relation from minhash
-    signatures — the shared front half of ``lsh_candidates``, exposed so
-    the cap-semantics oracle can STAGE the band relation and have DuckDB
-    mirror everything downstream of the (non-SQL) xxhash64 banding.
-    Delegates to the single banding kernel (``lsh.band_rows``) so the
-    document path can never desynchronize from the clip pipeline's."""
-    from kmcp_spark.operators.lsh import band_rows
-
-    return band_rows(signatures, bands, rows_per_band, "doc_id")
-
-
-def pairs_from_band_rows(band_rows: DataFrame, max_bucket: int) -> DataFrame:
-    """Back half of ``lsh_candidates``: bucket by (band_id, band_hash),
-    DROP buckets above ``max_bucket``, expand i<j pairs in-row, count
-    shared bands."""
-    members = (
-        band_rows.groupBy("band_id", "band_hash")
-        .agg(F.collect_list("doc_id").alias("ids"))
-        .filter((F.size("ids") > 1) & (F.size("ids") <= max_bucket))
-    )
-    # all i<j pairs of the member array, normalized (least, greatest) so
-    # the nondeterministic collect_list order never leaks into results
-    ids = F.col("ids")
-    pairs = F.flatten(
-        F.transform(
-            ids,
-            lambda x, i: F.transform(
-                F.slice(ids, i + 2, F.size(ids)),
-                lambda y: F.struct(
-                    F.least(x, y).alias("a"), F.greatest(x, y).alias("b")
-                ),
-            ),
-        )
-    )
-    return (
-        members.select(F.explode(pairs).alias("p"))
-        .groupBy(F.col("p.a").alias("a"), F.col("p.b").alias("b"))
-        .agg(F.count("*").alias("shared_bands"))
-    )
-
-
 def minhash_lsh_dup_pairs(
     docs: DataFrame,
     n: int = 3,
@@ -411,10 +309,11 @@ def _lsh_verify_pairs(
     shared-gram tests are ~1e-13, the same accepted risk as the
     xxhash64 exact-dup short-circuit.
     """
-    if high_recall:
-        cand = lsh_candidates(sigs.select("doc_id", "minhash"), bands=num_perm // 2, rows_per_band=2)
-    else:
-        cand = lsh_candidates(sigs.select("doc_id", "minhash"), bands=num_perm // 4, rows_per_band=4)
+    # buckets above the cap are dropped: with 32-64 bands, the other
+    # bands make the miss probability negligible (minhash_lsh_dup_pairs)
+    rpb = 2 if high_recall else 4
+    bands = band_rows(sigs.select("doc_id", "minhash"), num_perm // rpb, rpb, "doc_id")
+    cand, _ = bucket_pairs(bands, "doc_id", BAND_KEY, 10_000)
     sa = sigs.select(
         F.col("doc_id").alias("a"), F.col("gram_h").alias("_ha"), F.col("n_grams").alias("_na")
     )
@@ -466,20 +365,8 @@ def simhash_band_candidates(
     buckets = sigs.select("doc_id", F.explode(band_structs).alias("bd")).select(
         "doc_id", "bd.band_id", "bd.band_val"
     )
-    sizes = buckets.groupBy("band_id", "band_val").agg(F.count("*").alias("sz"))
-    ok = buckets.join(
-        sizes.filter((F.col("sz") > 1) & (F.col("sz") <= max_bucket)).select(
-            "band_id", "band_val"
-        ),
-        ["band_id", "band_val"],
-    )
-    return (
-        ok.alias("l")
-        .join(ok.alias("r"), ["band_id", "band_val"])
-        .filter(F.col("l.doc_id") < F.col("r.doc_id"))
-        .select(F.col("l.doc_id").alias("a"), F.col("r.doc_id").alias("b"))
-        .distinct()
-    )
+    pairs, _ = bucket_pairs(buckets, "doc_id", ["band_id", "band_val"], max_bucket)
+    return pairs.drop("shared")
 
 
 def simhash_dup_pairs(
@@ -634,23 +521,11 @@ def ngram_containment_pairs(
     """Containment (qCov analog, `kmcp/cmd/util-db-search.go:90-92`):
     |A∩B| / min(|A|,|B|) >= threshold — catches truncation/subset dups
     that plain Jaccard misses (detection path T3 in FIXTURES.md)."""
-    g, sizes, g_ok = _gram_tables(docs, n, max_gram_docs)
-    pairs = (
-        g_ok.alias("l")
-        .join(g_ok.alias("r"), "gram")
-        .filter(F.col("l.doc_id") < F.col("r.doc_id"))
-        .groupBy(F.col("l.doc_id").alias("a"), F.col("r.doc_id").alias("b"))
-        .agg(F.count("*").alias("n_common"))
-    )
-    return (
-        pairs.join(sizes.withColumnRenamed("doc_id", "a").withColumnRenamed("n_grams", "na"), "a")
-        .join(sizes.withColumnRenamed("doc_id", "b").withColumnRenamed("n_grams", "nb"), "b")
-        .select(
-            "a", "b", "n_common",
-            (F.col("n_common") / F.least("na", "nb")).alias("containment"),
-        )
-        .filter(F.col("containment") >= threshold)
-    )
+    pairs, _ = _gram_pairs(*_gram_tables(docs, n), max_gram_docs)
+    return pairs.select(
+        "a", "b", "n_common",
+        (F.col("n_common") / F.least("na", "nb")).alias("containment"),
+    ).filter(F.col("containment") >= threshold)
 
 
 def benchmark_contamination(

@@ -11,8 +11,8 @@ Two Spark stages re-express the Wang-2003 audio search pipeline:
    posting list; ours maps landmark code → (clip, time) postings).
 
 2. ``landmark_match_pairs`` — pure DataFrame ops, no Python in the hot
-   path: hot-code cap (the O3 skew idiom shared with the gram cap,
-   operators/dedup.py) → self-join on ``lhash`` → offset-histogram vote
+   path: hot-code cap (the O3 skew idiom, here over distinct clips per
+   code) → self-join on ``lhash`` → offset-histogram vote
    ``groupBy(a, b, Δt)`` → best offset per pair → threshold.  This is
    the matched-k-mer count per query-target of kmcp search
    (`kmcp/cmd/search.go:97`) with the offset vote supplying what the
@@ -92,6 +92,20 @@ def clip_landmarks(
     return clips.select(*cols).mapInPandas(run, schema=LANDMARK_SCHEMA)
 
 
+def _cap_hot_codes(postings: DataFrame, max_hash_clips: int) -> DataFrame:
+    """Postings whose code occurs in at most ``max_hash_clips`` DISTINCT
+    clips — the hot-code cap of both landmark joins.  It counts clips,
+    not postings (one clip may repeat a code at many frames), which is
+    why it is not ``lsh.bucket_pairs``' row-count cap."""
+    ok = (
+        postings.groupBy("lhash")
+        .agg(F.count_distinct("clip_id").alias("n_clips"))
+        .filter(F.col("n_clips") <= max_hash_clips)
+        .select("lhash")
+    )
+    return postings.join(ok, "lhash")
+
+
 def landmark_search(
     index_lm: DataFrame,
     query_lm: DataFrame,
@@ -123,13 +137,7 @@ def landmark_search(
     the cap relation is precomputed once with the index, not per
     search batch.
     """
-    hot = (
-        index_lm.groupBy("lhash")
-        .agg(F.count_distinct("clip_id").alias("n_clips"))
-        .filter(F.col("n_clips") <= max_hash_clips)
-        .select("lhash")
-    )
-    ix = index_lm.join(hot, "lhash")
+    ix = _cap_hot_codes(index_lm, max_hash_clips)
     q = query_lm.select(
         F.col("clip_id").alias("query_id"),
         "lhash",
@@ -184,13 +192,7 @@ def landmark_match_pairs(
     analog): an O3 skew cap, without which one viral code makes a
     quadratic bucket.
     """
-    hot = (
-        landmarks.groupBy("lhash")
-        .agg(F.count_distinct("clip_id").alias("n_clips"))
-        .filter(F.col("n_clips") <= max_hash_clips)
-        .select("lhash")
-    )
-    lm = landmarks.join(hot, "lhash")
+    lm = _cap_hot_codes(landmarks, max_hash_clips)
     x = lm.alias("x")
     y = lm.alias("y")
     votes = (

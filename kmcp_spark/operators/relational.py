@@ -4,13 +4,17 @@ driver's TPC-H-ish tables so each has a DuckDB-checkable oracle.
 Each function documents which reference operator it re-expresses
 (file:line of /root/reference).  These are the generic query shapes the
 clip pipeline uses internally (top-N per query, best-gap filter,
-co-occurrence self-join, percentile score, share normalization,
+co-occurrence pairs, percentile score, share normalization,
 hierarchy roll-up, multi-shard intersection, k-way merge re-rank).
 """
 
 from __future__ import annotations
 
+import sys
+
 from pyspark.sql import DataFrame, Window, functions as F
+
+from kmcp_spark.operators.lsh import bucket_pairs
 
 
 def topn_per_group(lineitem: DataFrame, n: int = 3) -> DataFrame:
@@ -43,16 +47,13 @@ def best_gap_filter(lineitem: DataFrame, gap: float = 0.1) -> DataFrame:
 def cooccurrence_pairs(lineitem: DataFrame, min_count: int = 2) -> DataFrame:
     """J5 analog — per-query target-pair co-occurrence counts feeding the
     ambiguity matrix (`kmcp/cmd/profile.go:1171-1190`).  Here: part pairs
-    co-occurring in the same order."""
+    co-occurring in the same order: each order is a bucket of parts,
+    expanded uncapped by the shared bucket -> pairs kernel."""
     li = lineitem.select("l_orderkey", "l_partkey").distinct()
-    return (
-        li.alias("x")
-        .join(li.alias("y"), "l_orderkey")
-        .filter(F.col("x.l_partkey") < F.col("y.l_partkey"))
-        .groupBy(F.col("x.l_partkey").alias("p1"), F.col("y.l_partkey").alias("p2"))
-        .agg(F.count("*").alias("n_orders"))
-        .filter(F.col("n_orders") >= min_count)
-    )
+    pairs, _ = bucket_pairs(li, "l_partkey", ["l_orderkey"], sys.maxsize)
+    return pairs.select(
+        F.col("a").alias("p1"), F.col("b").alias("p2"), F.col("shared").alias("n_orders")
+    ).filter(F.col("n_orders") >= min_count)
 
 
 def percentile_score(orders: DataFrame) -> DataFrame:

@@ -22,7 +22,7 @@ from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from kmcp_spark.config import PipelineConfig
 from kmcp_spark.operators.cluster import cluster_report, resolve_clusters
-from kmcp_spark.operators.lsh import band_buckets, bucket_stats, candidate_pairs
+from kmcp_spark.operators.lsh import BAND_KEY, band_buckets, bucket_pairs, bucket_stats
 from kmcp_spark.operators.sketch import sketch_clips
 from kmcp_spark.operators.verify import score_pairs, verify_pairs
 from kmcp_spark.sources.tables import (
@@ -235,47 +235,18 @@ class DedupPipeline:
 
         oversized_rel = []
 
-        if cfg.fuse_small_stages:
-            # candidates -> verified as ONE in-memory persisted chain:
-            # no parquet round-trips, one materializing job instead of
-            # two write jobs (each a ~3 s corpus-size-invariant constant
-            # — the r6 fixed-cost attribution in BENCH/BASELINE.md).
-            # Resume granularity coarsens to sketches -> clusters; when
-            # the clusters checkpoint is already valid the chain is left
-            # LAZY (unpersisted, uncounted) so a resumed run pays
-            # nothing unless the caller consumes PipelineResult.verified.
-            from pyspark import StorageLevel
-
-            clusters_valid = not force and checkpoint_valid(
-                os.path.join(self.out_dir, "clusters"), self.fp
+        def build_pairs():
+            pairs, oversized = bucket_pairs(
+                buckets, "clip_id", BAND_KEY, cfg.lsh.max_bucket, oversized="escalate"
             )
-            t0 = time.time()
-            pairs, oversized = candidate_pairs(buckets, cfg.lsh.max_bucket)
-            verified = verify_pairs(score_pairs(pairs, sketches, cfg), clips, cfg)
-            if not clusters_valid:
-                verified = verified.persist(StorageLevel.MEMORY_AND_DISK)
-                n_verified = verified.count()
-                self.metrics.append(
-                    StageMetric(
-                        "candidates+verified",
-                        n_verified,
-                        int((time.time() - t0) * 1000),
-                        False,
-                    )
-                )
-                oversized_rel.append(oversized)
-        else:
+            oversized_rel.append(oversized)
+            return pairs.withColumnRenamed("shared", "shared_bands")
 
-            def build_pairs():
-                pairs, oversized = candidate_pairs(buckets, cfg.lsh.max_bucket)
-                oversized_rel.append(oversized)
-                return pairs
-
-            candidates = self._stage("candidates", build_pairs, force=force)
+        candidates = self._stage("candidates", build_pairs, force=force)
         if oversized_rel:
             # no silent caps: record exactly what was not expanded.  The
             # count runs AFTER the checkpoint write on purpose: the write
-            # job materializes candidate_pairs' persisted over_rel as a
+            # job materializes bucket_pairs' persisted oversized rows as a
             # side effect, so this reads the cache — counting BEFORE the
             # write re-derived the full band window (sketches scan +
             # window shuffle) just to learn the bucket count (~1.4 s/leg
@@ -291,13 +262,11 @@ class DedupPipeline:
                 # that never happened this run
                 os.remove(over_path)
 
-        if not cfg.fuse_small_stages:
+        def build_verified():
+            scored = score_pairs(candidates, sketches, cfg)
+            return verify_pairs(scored, clips, cfg)
 
-            def build_verified():
-                scored = score_pairs(candidates, sketches, cfg)
-                return verify_pairs(scored, clips, cfg)
-
-            verified = self._stage("verified", build_verified, force=force)
+        verified = self._stage("verified", build_verified, force=force)
 
         cc_stats: dict = {}
 
@@ -342,8 +311,8 @@ class DedupPipeline:
         # sweep any blocks persisted during this run (e.g. the CC loop's
         # final label snapshot — superseded by the clusters checkpoint).
         # The untagged release_deferred() is the registry-side mirror:
-        # it drops the deferred-unpersist entries (candidate_pairs' lsh
-        # over_rel cache) so the registry holds no stale references and
+        # it drops the deferred-unpersist entries (bucket_pairs' lsh
+        # oversized-rows cache) so the registry holds no stale references and
         # non-pipeline consumers see the documented end-of-run sweep.
         from kmcp_spark.runtime import release_deferred
 

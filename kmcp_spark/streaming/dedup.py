@@ -55,7 +55,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from kmcp_spark.config import PipelineConfig
 from kmcp_spark.corpus import CLIPS_SCHEMA
-from kmcp_spark.operators.lsh import band_buckets, candidate_pairs
+from kmcp_spark.operators.lsh import BAND_KEY, band_buckets, bucket_pairs
 from kmcp_spark.operators.sketch import sketch_clips
 from kmcp_spark.operators.verify import score_pairs, verify_pairs
 
@@ -256,7 +256,10 @@ def _flag_batch(
             if prior_band_paths
             else bands_new
         )
-        pairs, _ = candidate_pairs(buckets, cfg.lsh.max_bucket)
+        pairs, _ = bucket_pairs(
+            buckets, "clip_id", BAND_KEY, cfg.lsh.max_bucket, oversized="escalate"
+        )
+        pairs = pairs.withColumnRenamed("shared", "shared_bands")
         # only pairs that touch this batch are new information — pairs
         # entirely within the index were flagged when their batch arrived
         nid = sk_new.select("clip_id")
@@ -312,7 +315,7 @@ def streaming_neardup_flags(
     if available_now:
         q = writer.trigger(availableNow=True).start()
         q.awaitTermination()
-        # drain complete: release the final batch's candidate_pairs lsh
+        # drain complete: release the final batch's bucket_pairs lsh
         # cache (each batch's call releases its predecessor's; the last
         # one has no successor to do so)
         from kmcp_spark.runtime import release_deferred

@@ -12,7 +12,7 @@ from pyspark.sql import functions as F
 from kmcp_spark.config import PipelineConfig
 from kmcp_spark.corpus import make_rows
 from kmcp_spark.operators.discordance import classify_pairs, discordant_pairs
-from kmcp_spark.operators.lsh import band_buckets, candidate_pairs
+from kmcp_spark.operators.lsh import BAND_KEY, band_buckets, bucket_pairs
 from kmcp_spark.operators.sketch import sketch_clips
 from kmcp_spark.operators.verify import score_pairs, verify_pairs
 
@@ -145,18 +145,19 @@ def test_domain_bands_surface_single_modality_pairs(spark):
     # banding reach at r=4)
     assert row["take1"].n_text * 8 < row["take1"].size + row["take2"].size
 
-    p0, _ = candidate_pairs(
-        band_buckets(sk, cfg.lsh.bands, cfg.lsh.rows_per_band), cfg.lsh.max_bucket
+    p0, _ = bucket_pairs(
+        band_buckets(sk, cfg.lsh.bands, cfg.lsh.rows_per_band),
+        "clip_id", BAND_KEY, cfg.lsh.max_bucket, oversized="escalate",
     )
-    p1, _ = candidate_pairs(
+    p1, _ = bucket_pairs(
         band_buckets(sk, cfg.lsh.bands, cfg.lsh.rows_per_band, cfg.lsh.domain_bands),
-        cfg.lsh.max_bucket,
+        "clip_id", BAND_KEY, cfg.lsh.max_bucket, oversized="escalate",
     )
     assert p0.count() == 0, "combined-only banding should not reach this pair"
     got = p1.collect()
     assert len(got) == 1 and got[0].a == "take1" and got[0].b == "take2"
     # identical text -> ALL text-domain bands collide (certainty, not luck)
-    assert got[0].shared_bands >= cfg.lsh.domain_bands
+    assert got[0].shared >= cfg.lsh.domain_bands
 
 
 def test_null_domain_signature_emits_no_bands(spark):
@@ -218,10 +219,11 @@ def test_discordant_pairs_end_to_end(spark):
     raw = _rows(140)
     clips = spark.createDataFrame(raw.drop(columns=["cluster_id", "transform"]))
     sk = sketch_clips(clips, cfg).localCheckpoint(eager=True)
-    pairs, _ = candidate_pairs(
+    pairs, _ = bucket_pairs(
         band_buckets(sk, cfg.lsh.bands, cfg.lsh.rows_per_band, cfg.lsh.domain_bands),
-        cfg.lsh.max_bucket,
+        "clip_id", BAND_KEY, cfg.lsh.max_bucket, oversized="escalate",
     )
+    pairs = pairs.withColumnRenamed("shared", "shared_bands")
     verified = verify_pairs(score_pairs(pairs, sk, cfg), clips, cfg).localCheckpoint(
         eager=True
     )

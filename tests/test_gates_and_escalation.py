@@ -9,7 +9,7 @@ from pyspark.sql import functions as F
 
 from kmcp_spark.config import LSHConfig, PipelineConfig, SketchConfig
 from kmcp_spark.operators.cluster import connected_components, prune_weak_edges
-from kmcp_spark.operators.lsh import band_buckets, candidate_pairs
+from kmcp_spark.operators.lsh import BAND_KEY, band_buckets, bucket_pairs
 from kmcp_spark.operators.verify import min_bands_for_fpr
 
 
@@ -77,7 +77,7 @@ def test_oversized_bucket_escalation_links_members(spark):
         + [("x1", 1, 777), ("x2", 1, 777)],
         "clip_id string, band_id int, band_hash bigint",
     )
-    pairs, oversized = candidate_pairs(buckets, max_bucket=10)
+    pairs, oversized = bucket_pairs(buckets, "clip_id", BAND_KEY, 10, oversized="escalate")
     got = [(r.a, r.b) for r in pairs.collect()]
     assert oversized.count() == 1
     # the small bucket still pair-expands fully
@@ -262,8 +262,8 @@ def test_duplicate_band_rows_emit_no_self_pairs(spark):
         [("c1", 0, 99), ("c1", 0, 99), ("c2", 0, 99)],
         "clip_id string, band_id int, band_hash bigint",
     )
-    pairs, _ = candidate_pairs(buckets, max_bucket=10)
-    got = {(r.a, r.b): r.shared_bands for r in pairs.collect()}
+    pairs, _ = bucket_pairs(buckets, "clip_id", BAND_KEY, 10, oversized="escalate")
+    got = {(r.a, r.b): r.shared for r in pairs.collect()}
     assert all(a != b for a, b in got)
     # the real pair survives (counted twice: c1 appears in 2 band rows)
     assert ("c1", "c2") in got

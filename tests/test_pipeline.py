@@ -182,36 +182,3 @@ def test_no_cached_relations_after_run(spark, corpus, tmp_path_factory):
     after = set(sc._jsc.getPersistentRDDs().keySet().toArray())
     leaked = after - before
     assert not leaked, f"pipeline run left cached RDDs: {leaked}"
-
-
-def test_fused_small_stages_parity_and_lazy_resume(spark, tmp_out):
-    """fuse_small_stages must produce byte-identical clusters (the bench
-    legs run fused; the library default stays unfused for per-stage
-    resume), and a fused rerun over a valid clusters checkpoint must
-    resume without materializing the candidates+verified chain."""
-    import os
-
-    from kmcp_spark.corpus import generate_clips
-    from kmcp_spark.plans.pipeline import DedupPipeline
-
-    clips, _ = generate_clips(spark, 300, min_dur_s=0.5, max_dur_s=1.2)
-    clips = clips.localCheckpoint(eager=True)
-    outs = {}
-    for tag, cfg in (
-        ("unfused", PipelineConfig()),
-        ("fused", PipelineConfig(fuse_small_stages=True)),
-    ):
-        res = DedupPipeline(spark, cfg, os.path.join(tmp_out, tag)).run(clips)
-        outs[tag] = sorted(
-            (r.clip_id, r.cluster_id, r.cluster_size) for r in res.clusters.collect()
-        )
-        names = [m.stage for m in res.metrics]
-        if tag == "fused":
-            assert "candidates+verified" in names
-            assert "candidates" not in names and "verified" not in names
-    assert outs["fused"] == outs["unfused"] and outs["fused"]
-    res2 = DedupPipeline(
-        spark, PipelineConfig(fuse_small_stages=True), os.path.join(tmp_out, "fused")
-    ).run(clips)
-    assert all(m.resumed for m in res2.metrics)
-    assert [m.stage for m in res2.metrics] == ["exact_groups", "sketches", "clusters"]
